@@ -23,6 +23,8 @@ from typing import Any, Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
+from velostream_spark.streaming.runner import start_query
+
 #: build() -> streaming DataFrame; re-invoked on RESUME (plans are not
 #: serializable across stop/start, so jobs are declared by a builder fn).
 PlanBuilder = Callable[[], DataFrame]
@@ -126,21 +128,22 @@ class StreamJobManager:
         return job
 
     def _start(self, job: StreamJob, query_name: str | None = None) -> None:
-        writer = job.build().writeStream
+        """Start the job's query through the runner's scoped start: a
+        checkpoint on the local file system gets the FileSystem-based
+        checkpoint manager (no weaker than the default there; see
+        runner._FM_CONF), bounded triggers the size-derived partition
+        count. Other schemes and a session-chosen manager keep Spark's
+        default, so a durable HDFS/S3 checkpoint behaves as before."""
+        sdf = job.build()
+        writer = sdf.writeStream
         if job.foreach_batch is not None:
             writer = writer.foreachBatch(job.foreach_batch)
         else:
             writer = writer.format(job.sink_format)
             for k, v in job.sink_options.items():
                 writer = writer.option(k, v)
-        writer = (
-            writer.queryName(query_name or job.name)
-            .outputMode(job.output_mode)
-            .option("checkpointLocation", job.checkpoint)
-        )
-        if job.trigger:
-            writer = writer.trigger(**job.trigger)
-        job.query = writer.start()
+        writer = writer.queryName(query_name or job.name).outputMode(job.output_mode)
+        job.query = start_query(sdf, writer, job.checkpoint, job.trigger)
         job.state = "running"
 
     def start(self, name: str) -> StreamJob:

@@ -21,8 +21,14 @@ import itertools
 import math
 import os
 import tempfile
+import threading
+import time
+from typing import Any
+from urllib.parse import urlparse
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 _COUNTER = itertools.count()
 
@@ -33,16 +39,16 @@ _COUNTER = itertools.count()
 #: afterwards, so a small bounded stream otherwise pays one state-store
 #: instance (delta-file commit per micro-batch, maintenance thread) per
 #: session shuffle partition — measured 1.18 s vs 0.71 s for an identical
-#: dropDuplicates job at 32 vs 8 partitions on this host. The partition
-#: count here is ceil(source_bytes / target), CLAMPED ABOVE at the
+#: dropDuplicates job at 32 vs 8 partitions (OPTIMIZATION_r15.md §5). The
+#: partition count is ceil(source_bytes / target), CLAMPED ABOVE at the
 #: session's own shuffle-partition setting: a corpus-scale input always
 #: yields >= the configured parallelism, so cluster behavior is the
 #: session default, unchanged — only small bounded runs stop paying for
-#: empty state stores. Override the target via
-#: $VS_STREAM_TARGET_PART_BYTES (bytes; "-1" disables the sizing).
-_TARGET_PART_BYTES = int(
-    os.environ.get("VS_STREAM_TARGET_PART_BYTES", str(4 * 1024 * 1024))
-)
+#: empty state stores.
+_TARGET_PART_BYTES = 4 * 1024 * 1024
+
+_SHUFFLE_CONF = "spark.sql.shuffle.partitions"
+
 
 def _stream_input_bytes(sdf: DataFrame) -> "int | None":
     """Total bytes of the local file sources feeding ``sdf``, read from
@@ -93,92 +99,159 @@ def _stream_input_bytes(sdf: DataFrame) -> "int | None":
     return total if seen and total > 0 else None
 
 
-@contextlib.contextmanager
-def _sized_shuffle_partitions(sdf: DataFrame):
-    """Set spark.sql.shuffle.partitions from the stream's source size for
-    the duration of a bounded run (state partition count is captured at
-    query start), then restore the session value.
-
-    Assumes the session runs bounded streams SEQUENTIALLY (the bench and
-    tests do): the override is session-global while the run starts, so a
-    query planned concurrently on the same session would pick it up. Scope
-    via a cloned session (spark.newSession()) if that ever changes."""
-    spark = sdf.sparkSession
-    if _TARGET_PART_BYTES <= 0:
-        yield
-        return
+def _sized_partitions(sdf: DataFrame) -> "int | None":
+    """Shuffle/state partition count for a bounded run of ``sdf``, or None
+    to keep the session value (unknown input size, or a sizing that would
+    not at least halve the session count: a 29-for-32 rewrite cannot win
+    anything but still perturbs the plan)."""
     n_bytes = _stream_input_bytes(sdf)
     if n_bytes is None:
-        yield
-        return
-    try:
-        session_n = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except Exception:
-        yield
-        return
+        return None
+    session_n = int(sdf.sparkSession.conf.get(_SHUFFLE_CONF))
     n = min(session_n, max(1, math.ceil(n_bytes / _TARGET_PART_BYTES)))
-    # Hysteresis: only act when the sizing at least HALVES the partition
-    # count — a 29-for-32 rewrite cannot win anything but still perturbs
-    # the plan; the target of this sizing is the small-input regime where
-    # n collapses to a handful.
-    if n > session_n // 2:
-        yield
-        return
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", str(session_n))
+    return n if n <= session_n // 2 else None
 
-#: Checkpoint file manager for the runner's throwaway LOCAL checkpoints
-#: (r16, guide §5 — driver-side per-run fixed costs). Spark's default
-#: FileContext-based manager constructs a fresh FileContext +
-#: AbstractFileSystem per metadata log AND per state-store provider
-#: (FileContext has no instance cache), which a long-lived production
-#: query pays once but a bounded run-to-completion pays on EVERY run:
-#: measured ~40 ms per metadata op (latestOffset / walCommit /
-#: commitOffsets) and a large share of the stateful addBatch wall.
-#: FileSystemBasedCheckpointFileManager — Spark's own fallback manager —
-#: goes through the process-wide FileSystem CACHE instead: interleaved
-#: same-session A/B (tools/ckpt_fm_spot.py) measured the metadata trio
-#: 42/41/42 → 9/9/9 ms and whole-job walls 0.57 → 0.40 s (stateless) /
-#: 1.10 → 0.71 s (stateful dropDuplicates). The FileContext manager's
-#: stronger rename-without-overwrite atomicity exists to protect DURABLE
-#: checkpoints from concurrent zombie drivers; a fresh single-driver
-#: scratch dir per run (never resumed, deleted at exit) has no such
-#: writer, so this is scoped HERE — production jobs with their own
-#: checkpointLocation (streaming/jobs.py) keep Spark's default. Disable
-#: via $VS_STREAM_LOCAL_CKPT_FM=0.
+
+#: Checkpoint file manager for checkpoints on the LOCAL file system.
+#: Spark's default FileContext-based manager constructs a fresh
+#: FileContext + AbstractFileSystem per metadata log AND per state-store
+#: provider (FileContext has no instance cache): ~40 ms per metadata op
+#: (latestOffset / walCommit / commitOffsets) and most of a stateful
+#: job's addBatch in state-store commits. FileSystemBasedCheckpointFileManager
+#: — Spark's own fallback manager — goes through the process-wide
+#: FileSystem CACHE instead: bounded runs went from a metadata trio of
+#: 42/41/42 to 9/9/9 ms and a dropDuplicates job from 1.10 to 0.71 s
+#: (OPTIMIZATION_r16.md); on 4 cores the continuous EMIT CHANGES agg of
+#: the stream_live benchmark went from 347 to 17 ms of state-store commit
+#: per batch (summed over its 4 stores) and from 608 to 464 ms per trigger.
+#:
+#: On ``file:`` the default manager gives no atomicity this one lacks
+#: (hadoop-client-api 3.4.2 bytecode): DelegateToFileSystem.renameInternal
+#: calls FileSystem.rename(src, dst, Rename.NONE); RawLocalFileSystem does
+#: not override that method, whose base implementation checks
+#: getFileLinkStatus(dst) and then does a plain rename — the same
+#: exists-then-rename FileSystemBasedCheckpointFileManager.renameTempFile
+#: does. The rename-without-overwrite guarantee that protects a durable
+#: checkpoint from a zombie driver exists only on HDFS-like stores, so any
+#: other scheme (hdfs://, s3a://, a non-file fs.defaultFS) keeps Spark's
+#: default, as does a session that chose a manager itself.
 _FM_CONF = "spark.sql.streaming.checkpointFileManagerClass"
-_FM_FS_BASED = (
+#: Spark 4 location first, then Spark 3's; the first the JVM resolves wins
+_FM_CANDIDATES: tuple[str, ...] = (
     "org.apache.spark.sql.execution.streaming.checkpointing."
-    "FileSystemBasedCheckpointFileManager"
+    "FileSystemBasedCheckpointFileManager",
+    "org.apache.spark.sql.execution.streaming.FileSystemBasedCheckpointFileManager",
 )
-_LOCAL_CKPT_FM = os.environ.get("VS_STREAM_LOCAL_CKPT_FM", "1") != "0"
+_FM_RESOLVED: dict[tuple[str, ...], "str | None"] = {}
 
 
-@contextlib.contextmanager
-def _local_ckpt_file_manager(spark):
-    """Apply the FileSystem-based checkpoint manager for the duration of
-    one bounded run over a runner-owned local scratch checkpoint, then
-    restore the session value. Same sequential-session assumption as
-    :func:`_sized_shuffle_partitions`."""
-    if not _LOCAL_CKPT_FM:
-        yield
-        return
+def _fs_manager_class(spark: SparkSession) -> "str | None":
+    """The FileSystem-based manager's class name on this JVM, probed with
+    Class.forName once per process; None when no candidate resolves."""
+    if _FM_CANDIDATES not in _FM_RESOLVED:
+        found = None
+        for name in _FM_CANDIDATES:
+            try:
+                spark._jvm.java.lang.Class.forName(name)  # type: ignore[attr-defined]
+            except Py4JError:
+                continue
+            found = name
+            break
+        _FM_RESOLVED[_FM_CANDIDATES] = found
+    return _FM_RESOLVED[_FM_CANDIDATES]
+
+
+def _is_local_path(path: str, default_fs: str = "file:///") -> bool:
+    """True when ``path`` resolves to the local file system: a ``file:``
+    URI, or a scheme-less path under a ``file:`` default file system."""
+    scheme = urlparse(path).scheme or urlparse(default_fs).scheme
+    return scheme in ("", "file")
+
+
+def _start_overrides(
+    sdf: DataFrame, checkpoint: str, bounded: bool
+) -> dict[str, str]:
+    """Session conf overrides for starting ``sdf`` against ``checkpoint``:
+    the FileSystem-based checkpoint manager for a local checkpoint the
+    session has not chosen a manager for, and — bounded triggers only —
+    the size-derived partition count. A continuous job's state partition
+    count is fixed for its checkpoint's whole life, so it keeps the
+    session value."""
+    spark = sdf.sparkSession
+    out: dict[str, str] = {}
     try:
-        prev = spark.conf.get(_FM_CONF, None)
-    except Exception:
-        yield
-        return
-    spark.conf.set(_FM_CONF, _FM_FS_BASED)
-    try:
-        yield
-    finally:
-        if prev is None:
-            spark.conf.unset(_FM_CONF)
-        else:
-            spark.conf.set(_FM_CONF, prev)
+        hconf = spark.sparkContext._jsc.hadoopConfiguration()  # type: ignore[union-attr]
+    except AttributeError:  # no JVM gateway (Spark Connect): keep the default
+        hconf = None
+    if (
+        hconf is not None
+        and not (spark.conf.get(_FM_CONF, None) or hconf.get(_FM_CONF))
+        and _is_local_path(checkpoint, hconf.get("fs.defaultFS") or "file:///")
+    ):
+        fm = _fs_manager_class(spark)
+        if fm is not None:
+            out[_FM_CONF] = fm
+    n = _sized_partitions(sdf) if bounded else None
+    if n is not None:
+        out[_SHUFFLE_CONF] = str(n)
+    return out
+
+
+#: Serializes set → start → restore, so only the starts of concurrent
+#: queries wait on each other, and each captures its own overrides.
+_START_LOCK = threading.Lock()
+#: Upper bound on holding the overrides while a query opens its logs.
+_INIT_WAIT_S = 60.0
+
+
+def start_query(
+    sdf: DataFrame,
+    writer: DataStreamWriter,
+    checkpoint: str,
+    trigger: "dict[str, Any] | None" = None,
+) -> StreamingQuery:
+    """Start ``writer`` (a writeStream of ``sdf``) on ``checkpoint`` with
+    ``trigger``, under the scoped conf overrides of
+    :func:`_start_overrides`; the session conf is restored exactly
+    (unset keys unset again) before returning, also when start() raises.
+
+    The overrides are held until the query has opened every log it
+    writes, and no longer (not across awaitTermination). In Spark 4.1 the
+    stream's cloned session — which opens the offsets/commits logs and
+    plans batches and state stores — is copied inside start(), but the
+    sources and their ``sources/N`` logs are created afterwards on the
+    stream thread from the ORIGINAL session's conf, while the status
+    reads "Initializing sources"; start() returns before that. With no
+    override to hold, start() alone runs under the lock, so the query
+    cannot capture another start's overrides."""
+    trigger = trigger or {}
+    writer = writer.option("checkpointLocation", checkpoint)
+    if trigger:
+        writer = writer.trigger(**trigger)
+    bounded = bool(trigger.get("availableNow") or trigger.get("once"))
+    spark = sdf.sparkSession
+    with _START_LOCK:
+        overrides = _start_overrides(sdf, checkpoint, bounded)
+        prev = {k: spark.conf.get(k, None) for k in overrides}
+        try:
+            for k, v in overrides.items():
+                spark.conf.set(k, v)
+            q = writer.start()
+            deadline = time.monotonic() + _INIT_WAIT_S
+            while (
+                overrides
+                and q.isActive
+                and q.status["message"].startswith("Initializing")
+                and time.monotonic() < deadline
+            ):
+                time.sleep(0.005)
+        finally:
+            for k, v in prev.items():
+                if v is None:
+                    spark.conf.unset(k)
+                else:
+                    spark.conf.set(k, v)
+    return q
 
 
 #: Throwaway checkpoints/sinks (unique per call, never resumed) go to tmpfs
@@ -216,6 +289,9 @@ import atexit  # noqa: E402
 atexit.register(_sweep_scratch)
 
 
+_AVAILABLE_NOW = {"availableNow": True}
+
+
 def run_available_now(
     sdf: DataFrame,
     output_mode: str,
@@ -233,33 +309,16 @@ def run_available_now(
     ckpt = _scratch_dir(f"vs-ckpt-{name}-")
     if output_mode == "append":
         out_dir = _scratch_dir(f"vs-out-{name}-")
-        with _sized_shuffle_partitions(sdf), _local_ckpt_file_manager(
-            sdf.sparkSession
-        ):
-            q = (
-                sdf.writeStream.format("parquet")
-                .option("path", out_dir)
-                .queryName(name)
-                .outputMode(output_mode)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(timeout_s)
+        writer = sdf.writeStream.format("parquet").option("path", out_dir)
+    else:
+        writer = sdf.writeStream.format("memory")
+    q = start_query(
+        sdf, writer.queryName(name).outputMode(output_mode), ckpt, _AVAILABLE_NOW
+    )
+    q.awaitTermination(timeout_s)
+    if output_mode == "append":
         # Explicit schema: a zero-row run leaves no data files to infer from.
         return sdf.sparkSession.read.schema(sdf.schema).parquet(out_dir)
-    with _sized_shuffle_partitions(sdf), _local_ckpt_file_manager(
-        sdf.sparkSession
-    ):
-        q = (
-            sdf.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(timeout_s)
     return sdf.sparkSession.table(name)
 
 
@@ -275,18 +334,8 @@ def run_foreach_batch(
     ``func(batch_df, batch_id)`` is invoked once per micro-batch."""
     name = _unique(query_name or "vs_feb")
     ckpt = _scratch_dir(f"vs-ckpt-{name}-")
-    with _sized_shuffle_partitions(sdf), _local_ckpt_file_manager(
-        sdf.sparkSession
-    ):
-        q = (
-            sdf.writeStream.foreachBatch(func)
-            .queryName(name)
-            .outputMode(output_mode)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(timeout_s)
+    writer = sdf.writeStream.foreachBatch(func).queryName(name).outputMode(output_mode)
+    start_query(sdf, writer, ckpt, _AVAILABLE_NOW).awaitTermination(timeout_s)
 
 
 def max_event_time(spark: SparkSession, batch_df: DataFrame, ts_col: str):
